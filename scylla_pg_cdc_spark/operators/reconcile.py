@@ -718,6 +718,24 @@ def q_merkle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _row_hashes(df: DataFrame, keys: list[str], nbuckets: int) -> DataFrame:
+    """(bucket, hv) per row: key-hash bucket plus xxhash64 of the
+    canonicalized non-key columns — the unit ``bucket_digests`` folds
+    and ``merge_digest_deltas`` XORs in and out."""
+    kcols = [F.col(k) for k in keys]
+    val_cols = sorted(c for c in df.columns if c not in keys)
+    canon = F.concat_ws(
+        "\x01", *[
+            F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
+            for c in val_cols
+        ]
+    )
+    return df.select(
+        F.pmod(F.xxhash64(*kcols), F.lit(nbuckets)).alias("bucket"),
+        F.xxhash64(canon).alias("hv"),
+    )
+
+
 def bucket_digests(
     df: DataFrame, keys: list[str], nbuckets: int
 ) -> DataFrame:
@@ -727,19 +745,8 @@ def bucket_digests(
     but INVERTIBLE — XOR-ing a row's hash again removes it — which is
     what lets CDC deltas maintain the digest incrementally
     (``merge_digest_deltas``) instead of rescanning the table."""
-    kcols = [F.col(k) for k in keys]
-    val_cols = sorted(c for c in df.columns if c not in keys)
-    canon = F.concat_ws(
-        "\x01", *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-            for c in val_cols
-        ]
-    )
     return (
-        df.select(
-            F.pmod(F.xxhash64(*kcols), F.lit(nbuckets)).alias("bucket"),
-            F.xxhash64(canon).alias("hv"),
-        )
+        _row_hashes(df, keys, nbuckets)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("hv").alias("dig"))
     )
@@ -766,21 +773,27 @@ def merge_digest_deltas(
     consumer keeps replica-comparison digests hot at 100 TB: each
     epoch folds its delta; reconciliation then compares two digest
     frames (``q_merkle_diff`` shape) at any moment. Equality with a
-    from-scratch recompute is pinned in tests."""
-    rem = bucket_digests(removed, keys, nbuckets).select(
-        "bucket", (-F.col("n")).alias("dn"), F.col("dig").alias("dx")
+    from-scratch recompute is pinned in tests.
+
+    ONE aggregation: the signed row hashes (-1 per removed row, +1 per
+    added row) and the prior state rows are unioned and folded by
+    bucket with SUM / BIT_XOR, so map-side partial aggregation
+    collapses each side before the single shuffle. ``removed`` and
+    ``added`` must carry exactly the digested table's columns (no
+    layout columns such as a partition bucket: a hash over an extra
+    column never cancels its earlier XOR-in)."""
+    rem = _row_hashes(removed, keys, nbuckets).select(
+        "bucket", F.lit(-1).cast("long").alias("n"), "hv"
     )
-    add = bucket_digests(added, keys, nbuckets).select(
-        "bucket", F.col("n").alias("dn"), F.col("dig").alias("dx")
+    add = _row_hashes(added, keys, nbuckets).select(
+        "bucket", F.lit(1).cast("long").alias("n"), "hv"
     )
-    st = state.select(
-        "bucket", F.col("n").alias("dn"), F.col("dig").alias("dx")
-    )
+    st = state.select("bucket", "n", F.col("dig").alias("hv"))
     return (
         st.unionByName(rem)
         .unionByName(add)
         .groupBy("bucket")
-        .agg(F.sum("dn").alias("n"), F.bit_xor("dx").alias("dig"))
+        .agg(F.sum("n").alias("n"), F.bit_xor("hv").alias("dig"))
         .filter(F.col("n") > 0)
     )
 

@@ -38,11 +38,10 @@ from pyspark.sql import functions as F
 
 from scylla_pg_cdc_spark.streaming.pipeline import (
     STATE_BUCKETS,
+    STATE_COLS,
     _bucket_dirs,
     _state_bucket,
 )
-
-_COLS = ["event_id", "key", "op", "event_type", "value", "props", "commit_ms"]
 
 
 def append_epoch(
@@ -58,7 +57,7 @@ def append_epoch(
     idempotent latest-per-key reducer."""
     from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
 
-    cols = [c if c != "key" else key for c in _COLS]
+    cols = [c if c != "key" else key for c in STATE_COLS]
     delta = (
         compact_latest_agg(
             batch.select(*cols).withColumnRenamed(key, "key"),

@@ -14,7 +14,9 @@ maintainable under deletes (a removed row may have held the extremum)
 — for those, fall back to recompute (the reference's behavior).
 
 ``state_transition`` derives the (removed, added) row sets of one
-upsert-compaction epoch; ``apply_delta`` folds them into the MV.
+upsert-compaction epoch — the reference semantics the streaming
+pipeline's single keyed delta (``pipeline.epoch_delta``) is tested
+against; ``apply_delta`` folds them into the MV.
 """
 
 from __future__ import annotations
@@ -83,6 +85,43 @@ def state_transition(
     return removed, added
 
 
+def signed_rows(
+    removed: DataFrame,
+    added: DataFrame,
+    group_cols: list[str],
+    sum_cols: list[str],
+) -> DataFrame:
+    """The delta in the MV's own column layout, one row per state row:
+    ``n_rows`` = +1 for an added row / -1 for a removed one and each
+    ``sum_<c>`` = +c / -c. Unioned with MV rows and folded by
+    ``fold_rows``, it yields the next MV."""
+
+    def signed(df: DataFrame, sign: int) -> DataFrame:
+        return df.select(
+            *group_cols,
+            F.lit(sign).cast("long").alias("n_rows"),
+            *[(F.col(c) * sign).alias(f"sum_{c}") for c in sum_cols],
+        )
+
+    return signed(added, 1).unionByName(signed(removed, -1))
+
+
+def fold_rows(
+    rows: DataFrame, group_cols: list[str], sum_cols: list[str]
+) -> DataFrame:
+    """Sum MV-layout rows (prior MV rows and/or ``signed_rows``) per
+    group; groups whose row count drops to zero disappear (matching
+    recompute exactly)."""
+    return (
+        rows.groupBy(*group_cols)
+        .agg(
+            F.sum("n_rows").cast("long").alias("n_rows"),
+            *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols],
+        )
+        .filter(F.col("n_rows") > 0)
+    )
+
+
 def apply_delta(
     mv_old: DataFrame | None,
     removed: DataFrame,
@@ -90,26 +129,14 @@ def apply_delta(
     group_cols: list[str],
     sum_cols: list[str],
 ) -> DataFrame:
-    """Fold +added/-removed into the MV; groups whose row count drops
-    to zero disappear (matching recompute exactly)."""
-
-    def signed(df: DataFrame, sign: int) -> DataFrame:
-        aggs = [(F.count(F.lit(1)) * sign).cast("long").alias("n_rows")] + [
-            (F.sum(c) * sign).alias(f"sum_{c}") for c in sum_cols
-        ]
-        return df.groupBy(*group_cols).agg(*aggs)
-
-    parts = [signed(added, 1), signed(removed, -1)]
+    """Fold +added/-removed into the MV in ONE aggregation: the signed
+    state rows and the prior MV rows are unioned and summed per group
+    (map-side partial aggregation collapses them before the single
+    shuffle)."""
+    rows = signed_rows(removed, added, group_cols, sum_cols)
     if mv_old is not None:
-        parts.append(mv_old)
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    folded = merged.groupBy(*group_cols).agg(
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols],
-    )
-    return folded.filter(F.col("n_rows") > 0)
+        rows = rows.unionByName(mv_old)
+    return fold_rows(rows, group_cols, sum_cols)
 
 
 def compute_join_view(

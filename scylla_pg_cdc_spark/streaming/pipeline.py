@@ -20,19 +20,42 @@ Reference parity:
   98-103`) -> poison-predicate branch written to dlq/
 - watermarked windowed rates (T4/T5, `alerts.py:79,92`)
 
-Scale: state lives in partitioned parquet keyed by the CDC key; each
-micro-batch shuffles once by key. At 100 TB the merge would target a
-transactional table format; the compaction expression is unchanged.
+One epoch (the foreachBatch body, the unit of idempotent commit):
+
+1. ``dlq``: poison rows split off and appended to dlq/;
+2. ``delta``: ``epoch_delta`` unions the batch (tagged new) with the
+   committed rows of the state buckets it touches (tagged old, read
+   with the known schema) and runs ONE keyed aggregation per
+   (bucket, key) — winner, committed row, touched flag — persisted
+   for the epoch;
+3. ``mv fold`` / ``digest fold``: the delta's (removed, added) images
+   fold into the bucketed MV and the anti-entropy digests, one
+   shuffle each, marker-gated;
+4. ``state commit``: the delta's winners of the touched buckets are
+   written (a narrow projection: already partitioned by bucket),
+   untouched buckets hardlinked, the layout swapped in — under the
+   retry wrapper; when retries run out the batch goes to dlq/ and the
+   folds that landed are compensated with the inverse delta.
+
+Each step's Spark jobs carry the description ``cdc epoch <id>: <step>``.
+
+Scale: state lives in bucket-partitioned parquet keyed by the CDC key;
+each micro-batch shuffles its rows and the touched state once by
+bucket. At 100 TB the merge would target a transactional table format;
+the compaction expression is unchanged.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -113,6 +136,7 @@ def to_change_events(stream: DataFrame) -> DataFrame:
 
 
 STATE_BUCKETS = 32  # default keyed-state partition count (see merge)
+STATE_COLS = ["event_id", "key", "op", "event_type", "value", "props", "commit_ms"]
 
 
 def _state_bucket(key: str, n_buckets: int):
@@ -165,23 +189,27 @@ def fold_mv_bucketed(
     closing the incremental-MV analog of the reference's O(table)
     REFRESH (S12). The epoch ``marker`` is staged INSIDE the new
     layout and committed by the same atomic rename, so data and marker
-    can never disagree (idempotent under epoch replay)."""
+    can never disagree (idempotent under epoch replay).
+
+    One shuffle: the signed delta rows (``mv.signed_rows``) and the
+    touched MV buckets — read with the fold's own schema, so no footer
+    inference job runs — are repartitioned together by MV bucket and
+    summed per (bucket, group) (``mv.fold_rows``); the written layout
+    is the shuffle's partitioning, one file per bucket."""
     import shutil
 
-    from scylla_pg_cdc_spark.streaming.mv import apply_delta
+    from scylla_pg_cdc_spark.streaming.mv import fold_rows, signed_rows
 
     spark = removed.sparkSession
     bcol = F.pmod(
         F.xxhash64(*[F.col(c).cast("string") for c in group_cols]),
         F.lit(n_buckets),
     ).cast("int")
+    rows = signed_rows(removed, added, group_cols, sum_cols)
+    mv_schema = fold_rows(rows, group_cols, sum_cols).schema
+    rows = rows.withColumn("__bucket", bcol)
     touched = sorted(
-        r["__bucket"]
-        for r in removed.select(*group_cols)
-        .unionByName(added.select(*group_cols))
-        .select(bcol.alias("__bucket"))
-        .distinct()
-        .collect()
+        r["__bucket"] for r in rows.select("__bucket").distinct().collect()
     )
     prev_exists = os.path.exists(mv_dir)
     if not touched and prev_exists:
@@ -191,46 +219,49 @@ def fold_mv_bucketed(
             f.write(marker)
         os.replace(tmp, os.path.join(mv_dir, "_EPOCH"))
         return
+    next_dir = mv_dir + "_next"
+    shutil.rmtree(next_dir, ignore_errors=True)
     if not touched:
         # first epoch, empty delta: flat empty MV with schema (a later
         # non-empty fold migrates it to the bucketed layout)
-        mv_new = apply_delta(None, removed, added, group_cols, sum_cols)
-        mv_new.repartition(1).write.mode("overwrite").parquet(mv_dir + "_next")
-        with open(os.path.join(mv_dir + "_next", "_EPOCH"), "w") as f:
+        spark.createDataFrame([], mv_schema).write.parquet(next_dir)
+        with open(os.path.join(next_dir, "_EPOCH"), "w") as f:
             f.write(marker)
-        os.rename(mv_dir + "_next", mv_dir)
+        os.rename(next_dir, mv_dir)
         return
     prev_buckets = _bucket_dirs(mv_dir) if prev_exists else {}
-    if not prev_exists:
-        mv_old, carry = None, {}
-    elif prev_buckets:
-        mv_old = (
-            spark.read.parquet(mv_dir)
+    carry: dict[int, str] = {}
+    if prev_buckets:
+        rows = rows.unionByName(
+            spark.read.schema(
+                StructType([*mv_schema, StructField("__bucket", IntegerType())])
+            )
+            .parquet(mv_dir)
             .filter(F.col("__bucket").isin(touched))
-            .drop("__bucket")
         )
-        carry = {
-            b: d for b, d in prev_buckets.items() if b not in set(touched)
-        }
-    else:
+        carry = {b: d for b, d in prev_buckets.items() if b not in touched}
+    elif prev_exists:
         # migration from a flat MV layout: one full rewrite
-        mv_old = spark.read.parquet(mv_dir)
-        if "__bucket" in mv_old.columns:
-            mv_old = mv_old.drop("__bucket")
-        carry = {}
+        rows = rows.unionByName(
+            spark.read.schema(mv_schema).parquet(mv_dir).withColumn(
+                "__bucket", bcol
+            )
+        )
 
-    mv_new = apply_delta(mv_old, removed, added, group_cols, sum_cols)
-    next_dir = mv_dir + "_next"
-    shutil.rmtree(next_dir, ignore_errors=True)
-    mv_new.withColumn("__bucket", bcol).repartition(
-        max(len(touched), 1), "__bucket"
-    ).write.mode("overwrite").partitionBy("__bucket").parquet(next_dir)
+    fold_rows(
+        rows.repartition(len(touched), "__bucket"),
+        ["__bucket", *group_cols],
+        sum_cols,
+    ).write.partitionBy("__bucket").parquet(next_dir)
     if carry:
         _carry_buckets(mv_dir, next_dir, carry)
     with open(os.path.join(next_dir, "_EPOCH"), "w") as f:
         f.write(marker)
     shutil.rmtree(mv_dir, ignore_errors=True)
     os.rename(next_dir, mv_dir)
+
+
+DIGEST_SCHEMA = "bucket long, n long, dig long"
 
 
 def fold_digests(
@@ -242,26 +273,28 @@ def fold_digests(
 ) -> None:
     """Fold one epoch's (removed, added) state delta into the
     anti-entropy digest state (``operators/reconcile.py``:
-    ``merge_digest_deltas`` — XOR out before-images, XOR in
-    after-images). The digest frame is only ``n_buckets`` rows, so a
-    full rewrite per epoch is already O(delta)-dominated; the epoch
-    marker is staged inside the new directory and committed by the
-    same atomic rename (idempotent under epoch replay). This keeps
-    replica-comparison state (``q_merkle_diff`` shape) HOT as changes
-    stream in — reconciliation never rescans the target."""
+    ``merge_digest_deltas`` — one aggregation over the signed row
+    hashes plus the prior digest rows, read with their known schema).
+    The digest frame is only ``n_buckets`` rows, so a full rewrite per
+    epoch (``coalesce(1)``: one file, no extra shuffle) is already
+    O(delta)-dominated; the epoch marker is staged inside the new
+    directory and committed by the same atomic rename (idempotent
+    under epoch replay). This keeps replica-comparison state
+    (``q_merkle_diff`` shape) HOT as changes stream in —
+    reconciliation never rescans the target."""
     import shutil
 
     from scylla_pg_cdc_spark.operators.reconcile import merge_digest_deltas
 
     spark = removed.sparkSession
     if os.path.exists(digest_dir):
-        state = spark.read.parquet(digest_dir).select("bucket", "n", "dig")
+        state = spark.read.schema(DIGEST_SCHEMA).parquet(digest_dir)
     else:
-        state = spark.createDataFrame([], "bucket long, n long, dig long")
+        state = spark.createDataFrame([], DIGEST_SCHEMA)
     new = merge_digest_deltas(state, removed, added, ["key"], n_buckets)
     next_dir = digest_dir + "_next"
     shutil.rmtree(next_dir, ignore_errors=True)
-    new.repartition(1).write.mode("overwrite").parquet(next_dir)
+    new.coalesce(1).write.mode("overwrite").parquet(next_dir)
     with open(os.path.join(next_dir, "_EPOCH"), "w") as f:
         f.write(marker)
     back = digest_dir + "_prev"
@@ -272,6 +305,185 @@ def fold_digests(
     shutil.rmtree(back, ignore_errors=True)
 
 
+def keyed_delta(
+    new: DataFrame, old: DataFrame | None, key: str, n_parts: int
+) -> DataFrame:
+    """The epoch's ONE keyed aggregation. ``new`` (batch rows) and
+    ``old`` (committed rows of the touched buckets) carry the same
+    columns plus ``__bucket``; their union is repartitioned by
+    ``__bucket`` into ``n_parts`` partitions and grouped by
+    (``__bucket``, key) — the repartition already satisfies the
+    grouping, so this is the only shuffle. Per key it returns:
+
+    - ``__win``: ``max_by(row, (commit_ms, event_id))`` over old and
+      new rows — the post-merge row (the upsert merge keeps the newest
+      regardless of arrival epoch, so a stale batch row loses);
+    - ``__old``: the newest committed row (NULL for a new key) — the
+      merge-on-read of an LSM layout's several rows per key comes free;
+    - ``__touched``: whether the batch carried the key.
+
+    Every column except the key sits in the two structs."""
+    value_cols = [c for c in new.columns if c not in (key, "__bucket")]
+    order_cols = [c for c in ("commit_ms", "event_id") if c in value_cols]
+    if not order_cols:
+        raise ValueError("the keyed delta needs commit_ms to pick the winner")
+    rows = new.withColumn("__new", F.lit(True))
+    if old is not None:
+        rows = rows.unionByName(
+            old.select(*new.columns).withColumn("__new", F.lit(False))
+        )
+    row = F.struct(*value_cols)
+    order = F.struct(*order_cols)
+    return (
+        rows.repartition(n_parts, "__bucket")
+        .groupBy("__bucket", key)
+        .agg(
+            F.max_by(row, order).alias("__win"),
+            # max_by skips NULL orderings: only committed rows compete
+            F.max_by(row, F.when(~F.col("__new"), order)).alias("__old"),
+            F.bool_or("__new").alias("__touched"),
+        )
+    )
+
+
+def delta_images(
+    delta: DataFrame, cols: list[str], key: str
+) -> tuple[DataFrame, DataFrame]:
+    """(removed, added) of a ``keyed_delta`` frame, with
+    ``state_transition``'s semantics: for every key the batch touched,
+    its committed row is removed and its post-merge row added, each
+    unless it is a tombstone (tombstones stay in the state but never
+    enter the MV or digests — subtracting one would corrupt the fold;
+    it still competes in ``__win``, so a stale upsert cannot outrank a
+    newer delete). Both carry exactly ``cols``, no layout column."""
+
+    def image(struct: str) -> DataFrame:
+        return delta.filter(
+            F.col("__touched") & (F.col(f"{struct}.op") != "DELETE")
+        ).select(
+            *[F.col(c) if c == key else F.col(f"{struct}.{c}") for c in cols]
+        )
+
+    return image("__old"), image("__win")
+
+
+class EpochDelta:
+    """One epoch's persisted keyed delta (``epoch_delta``): state,
+    MV and digests all fold from it."""
+
+    def __init__(self, new: DataFrame, rows: DataFrame | None,
+                 touched: list[int], key: str):
+        self.new = new  # the batch with __bucket (schema of a state row)
+        self.rows = rows  # persisted keyed_delta frame, None if no rows
+        self.touched = touched
+        self.key = key
+        self.cols = new.columns[:-1]
+        if rows is None:
+            empty = new.select(*self.cols).filter(F.lit(False))
+            self.removed, self.added = empty, empty
+        else:
+            self.removed, self.added = delta_images(rows, self.cols, key)
+
+    def state_rows(self) -> DataFrame:
+        """Post-merge rows of the touched buckets: a narrow projection
+        of the delta, already partitioned by bucket."""
+        return self.rows.select(
+            *[
+                F.col(c) if c == self.key else F.col(f"__win.{c}").alias(c)
+                for c in self.cols
+            ],
+            "__bucket",
+        )
+
+    def release(self) -> None:
+        if self.rows is not None:
+            self.rows.unpersist()
+
+
+def epoch_delta(
+    batch: DataFrame,
+    state_dir: str,
+    key: str = "key",
+    n_buckets: int = STATE_BUCKETS,
+) -> EpochDelta:
+    """Derive one epoch's delta against the committed state at
+    ``state_dir`` (eager-merge or LSM layout): the batch, tagged new,
+    unioned with the committed rows of the buckets it touches, tagged
+    old — read with the batch's known schema, so no footer-inference
+    job runs, and pruned to the touched bucket partitions — folded by
+    ``keyed_delta`` into ``min(#touched buckets, defaultParallelism)``
+    partitions and persisted. The persisted frame pins the pre-merge
+    state image: the commit is about to replace the dir it reads."""
+    spark = batch.sparkSession
+    cols = [key if c == "key" else c for c in STATE_COLS]
+    new = batch.select(*cols).withColumn(
+        "__bucket", _state_bucket(key, n_buckets)
+    )
+    # tiny driver-side list: at most n_buckets ints, never row data
+    touched = sorted(
+        r["__bucket"] for r in new.select("__bucket").distinct().collect()
+    )
+    if not touched:
+        return EpochDelta(new, None, touched, key)
+    prev_dir = _existing_state_dir(state_dir)
+    old = None
+    if prev_dir is not None and _bucket_dirs(prev_dir):
+        # partition pruning: only touched bucket dirs are scanned
+        old = (
+            spark.read.schema(new.schema)
+            .parquet(prev_dir)
+            .filter(F.col("__bucket").isin(touched))
+        )
+    elif prev_dir is not None:
+        # migration from the pre-bucketed flat layout: one full rewrite
+        old = (
+            spark.read.schema(new.select(*cols).schema)
+            .parquet(prev_dir)
+            .withColumn("__bucket", _state_bucket(key, n_buckets))
+        )
+    n_parts = min(len(touched), spark.sparkContext.defaultParallelism)
+    rows = keyed_delta(new, old, key, n_parts).persist()
+    return EpochDelta(new, rows, touched, key)
+
+
+def commit_state(delta: EpochDelta, state_dir: str) -> None:
+    """Commit an ``EpochDelta`` to the eager-merge state: the touched
+    buckets are written fresh from the delta's post-merge rows (one
+    file per bucket), every untouched bucket is hardlinked, and the
+    staged layout is swapped in. Re-running it (the retry wrapper)
+    re-derives the carry set from whatever is committed, so a retry
+    after a partial swap converges."""
+    import shutil
+
+    prev_dir = _existing_state_dir(state_dir)
+    if not delta.touched:
+        if prev_dir is not None:
+            return  # empty batch, state already committed: no-op epoch
+        # first epoch, empty batch: flat empty write (partitionBy on an
+        # empty frame emits no schema-bearing files); the next non-empty
+        # epoch migrates to the bucketed layout
+        delta.new.write.mode("overwrite").parquet(state_dir)
+        return
+    prev_buckets = _bucket_dirs(prev_dir) if prev_dir is not None else {}
+    carry = {b: d for b, d in prev_buckets.items() if b not in delta.touched}
+
+    next_dir = state_dir + "_next"
+    shutil.rmtree(next_dir, ignore_errors=True)
+    delta.state_rows().write.mode("overwrite").partitionBy("__bucket").parquet(
+        next_dir
+    )
+    _carry_buckets(prev_dir, next_dir, carry)
+    # swap: park current, promote next, drop parked (renames are atomic
+    # on a local/posix fs; hardlinked inodes survive the parked dir's
+    # removal)
+    back_dir = state_dir + "_prev"
+    shutil.rmtree(back_dir, ignore_errors=True)
+    if os.path.exists(state_dir):
+        os.rename(state_dir, back_dir)
+    os.rename(next_dir, state_dir)
+    shutil.rmtree(back_dir, ignore_errors=True)
+
+
 def merge_batch_into_state(
     batch: DataFrame,
     state_dir: str,
@@ -279,21 +491,21 @@ def merge_batch_into_state(
     n_buckets: int = STATE_BUCKETS,
 ) -> None:
     """foreachBatch upsert merge (T7): keep latest per key (tombstones
-    retained as ``__deleted`` rows so later upserts can resurrect the
-    key). Overwrite-by-epoch => idempotent under replays (T9).
+    retained as ``DELETE`` rows so later upserts can resurrect the
+    key). Overwrite-by-epoch => idempotent under replays (T9). It is
+    ``epoch_delta`` + ``commit_state`` — the one merge implementation
+    the streaming pipeline also runs, there with the MV and digest
+    folds reading the same persisted delta.
 
     Scale: state is hive-partitioned by ``__bucket =
     pmod(xxhash64(key), n_buckets)``. An epoch reads and rewrites ONLY
     the buckets its batch touches (partition pruning on the read,
     hardlinks carry every untouched bucket's files into the next
     epoch unscanned and unrewritten) — per-epoch cost is
-    O(batch + touched-state), not O(state). This replaces the round-1
-    full-rewrite merge, the one O(state)-per-epoch scale-killer
-    (VERDICT r1 "What's wrong" #3); the reference gets the same
+    O(batch + touched-state), not O(state), in one shuffle (the keyed
+    delta's repartition by bucket). The reference gets the same
     incrementality from per-row Postgres UPSERTs
-    (`postgres-sink.json:22-24`). Compaction uses the max_by
-    aggregation (map-side partial combine) so duplicate-key CDC rows
-    collapse before the shuffle.
+    (`postgres-sink.json:22-24`).
 
     Crash safety: the new state is fully assembled at ``<dir>_next``
     (fresh files for touched buckets + hardlinks for the rest), then
@@ -306,76 +518,25 @@ def merge_batch_into_state(
     object store the rename dance becomes a manifest/table-format
     commit (Delta/Iceberg MERGE); the bucket layout and touched-set
     pruning carry over unchanged."""
-    import shutil
+    delta = epoch_delta(batch, state_dir, key, n_buckets)
+    try:
+        commit_state(delta, state_dir)
+    finally:
+        delta.release()
 
-    from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
 
-    spark = batch.sparkSession
-    cols = ["event_id", key, "op", "event_type", "value", "props", "commit_ms"]
-    batch_b = batch.select(*cols).withColumn(
-        "__bucket", _state_bucket(key, n_buckets)
-    )
-    # tiny driver-side list: at most n_buckets ints, never row data
-    touched = sorted(
-        r["__bucket"]
-        for r in batch_b.select("__bucket").distinct().collect()
-    )
-    prev_dir = _existing_state_dir(state_dir)
-    prev_buckets = _bucket_dirs(prev_dir) if prev_dir is not None else {}
-
-    if not touched:
-        if prev_dir is not None:
-            return  # empty batch, state already committed: no-op epoch
-        # first epoch, empty batch: flat empty write (partitionBy on an
-        # empty frame emits no schema-bearing files); the next non-empty
-        # epoch migrates to the bucketed layout
-        batch_b.write.mode("overwrite").parquet(state_dir)
-        return
-
-    if prev_dir is None:
-        merged = batch_b
-        carry: dict[int, str] = {}
-    elif prev_buckets:
-        prev = spark.read.parquet(prev_dir)
-        # partition pruning: only touched bucket dirs are scanned
-        merged = prev.filter(F.col("__bucket").isin(touched)).select(
-            *cols, "__bucket"
-        ).unionByName(batch_b)
-        carry = {
-            b: d for b, d in prev_buckets.items() if b not in set(touched)
-        }
-    else:
-        # migration from the pre-bucketed flat layout: one full rewrite
-        prev = spark.read.parquet(prev_dir).select(*cols).withColumn(
-            "__bucket", _state_bucket(key, n_buckets)
-        )
-        merged = prev.unionByName(batch_b)
-        carry = {}
-
-    latest = (
-        compact_latest_agg(
-            merged.withColumnRenamed(key, "key"), keep_deleted=True
-        )
-        .drop("__deleted")
-        .withColumnRenamed("key", key)
-        .select(*cols, "__bucket")
-    )
-
-    next_dir = state_dir + "_next"
-    shutil.rmtree(next_dir, ignore_errors=True)
-    latest.repartition(max(len(touched), 1), "__bucket").write.mode(
-        "overwrite"
-    ).partitionBy("__bucket").parquet(next_dir)
-    _carry_buckets(prev_dir, next_dir, carry)
-    # swap: park current, promote next, drop parked (renames are atomic
-    # on a local/posix fs; hardlinked inodes survive the parked dir's
-    # removal)
-    back_dir = state_dir + "_prev"
-    shutil.rmtree(back_dir, ignore_errors=True)
-    if os.path.exists(state_dir):
-        os.rename(state_dir, back_dir)
-    os.rename(next_dir, state_dir)
-    shutil.rmtree(back_dir, ignore_errors=True)
+@contextmanager
+def _job(spark: SparkSession, epoch_id: int, step: str):
+    """Label the Spark jobs fired inside the block ``cdc epoch <id>:
+    <step>`` (profile rows then name the epoch's sub-step), restoring
+    the caller's label."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"cdc epoch {epoch_id}: {step}")
+    try:
+        yield
+    finally:
+        sc.setJobDescription(outer)
 
 
 def _existing_state_dir(state_dir: str) -> str | None:
@@ -443,59 +604,37 @@ def run_upsert_pipeline(
         read_event_stream(spark, sf_dir, glob, max_files_per_trigger)
     )
 
-    def _mv_marker() -> str | None:
+    def _marker(path: str) -> str | None:
         try:
-            with open(os.path.join(mv_dir, "_EPOCH")) as f:
+            with open(os.path.join(path, "_EPOCH")) as f:
                 return f.read().strip()
         except OSError:
             return None
 
-    def _digest_marker() -> str | None:
-        try:
-            with open(os.path.join(digest_dir, "_EPOCH")) as f:
-                return f.read().strip()
-        except OSError:
-            return None
-
-    def _fold_mv(removed: DataFrame, added: DataFrame, marker: str) -> None:
-        group_cols, sum_cols = mv_spec
-        fold_mv_bucketed(
-            mv_dir, removed, added, group_cols, sum_cols, marker,
-            n_buckets=state_buckets,
-        )
-
-    def compute_mv_delta(batch_clean: DataFrame):
-        from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
-        from scylla_pg_cdc_spark.streaming.mv import state_transition
-
-        prev_path = _existing_state_dir(state_dir)
-        if prev_path is None:
-            prev_state = None
-        elif state_mode == "lsm":
-            from scylla_pg_cdc_spark.streaming.lsm_state import read_latest
-
-            prev_state = read_latest(spark, prev_path)
-        else:
-            prev_state = spark.read.parquet(prev_path)
-        batch_latest = compact_latest_agg(batch_clean, keep_deleted=True).drop(
-            "__deleted"
-        )
-        removed, added = state_transition(prev_state, batch_latest, "key")
-        # pin the delta: it references the pre-merge state dir, which
-        # the merge swap is about to replace
-        return removed.persist(), added.persist()
+    # (job label, store dir, fold(removed, added, marker)) per store
+    # maintained from the epoch delta
+    folds = []
+    if mv_spec is not None:
+        folds.append(("mv fold", mv_dir, lambda r, a, m: fold_mv_bucketed(
+            mv_dir, r, a, *mv_spec, m, n_buckets=state_buckets
+        )))
+    if digest_buckets is not None:
+        folds.append(("digest fold", digest_dir, lambda r, a, m: fold_digests(
+            digest_dir, r, a, m, digest_buckets
+        )))
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         batch = batch.persist()
+        delta = None
         try:
             poison = poison_predicate()
-            poison_rows = batch.filter(poison).withColumn(
-                "error_context", F.lit("poison predicate matched")
-            ).withColumn("epoch_id", F.lit(epoch_id))
-            if poison_rows.limit(1).count() > 0:
-                poison_rows.write.mode("append").parquet(dlq_dir)
+            with _job(spark, epoch_id, "dlq"):
+                poison_rows = batch.filter(poison).withColumn(
+                    "error_context", F.lit("poison predicate matched")
+                ).withColumn("epoch_id", F.lit(epoch_id))
+                if poison_rows.limit(1).count() > 0:
+                    poison_rows.write.mode("append").parquet(dlq_dir)
             clean = batch.filter(~poison)
-            delta = None
             marker = f"epoch-{epoch_id}"
             if drift_monitor:
                 from scylla_pg_cdc_spark.streaming.drift_state import (
@@ -507,86 +646,66 @@ def run_upsert_pipeline(
                 # report on replay; the user-facing report is one
                 # hive partition per epoch, overwrite mode — both
                 # halves idempotent under any crash point
-                report = monitor_epoch(spark, drift_dir, clean, marker)
-                report.write.mode("overwrite").parquet(
-                    os.path.join(
-                        drift_dir, "report", f"epoch_id={epoch_id}"
+                with _job(spark, epoch_id, "drift"):
+                    report = monitor_epoch(spark, drift_dir, clean, marker)
+                    report.write.mode("overwrite").parquet(
+                        os.path.join(
+                            drift_dir, "report", f"epoch_id={epoch_id}"
+                        )
                     )
-                )
-            need_mv = mv_spec is not None and _mv_marker() != marker
-            need_dig = (
-                digest_buckets is not None and _digest_marker() != marker
-            )
-            if need_mv or need_dig:
-                # the marker makes each fold idempotent under epoch
-                # replay: a crash after a swap but before the
-                # checkpoint commit re-enters with the same epoch_id
-                # and skips the second fold
-                delta = compute_mv_delta(clean)
-            if need_mv:
-                _fold_mv(delta[0], delta[1], marker)
-            if need_dig:
-                fold_digests(
-                    digest_dir, delta[0], delta[1], marker, digest_buckets
-                )
+            # the delta is derived ONCE per epoch from the pre-merge
+            # state; the MV and digest folds and the state commit all
+            # read it (LSM mode appends the batch itself, so it needs
+            # the delta only for a fold). The in-dir marker makes each
+            # fold idempotent under epoch replay: a crash after a swap
+            # but before the checkpoint commit re-enters with the same
+            # epoch_id and skips the folds that already landed.
+            pending = [f for f in folds if _marker(f[1]) != marker]
+            if state_mode == "merge" or pending:
+                with _job(spark, epoch_id, "delta"):
+                    delta = epoch_delta(clean, state_dir, n_buckets=state_buckets)
+            for step, _, fold in pending:
+                with _job(spark, epoch_id, step):
+                    fold(delta.removed, delta.added, marker)
             if state_mode == "lsm":
                 from scylla_pg_cdc_spark.streaming.lsm_state import maintain
 
-                def _sink(b, d, n_buckets):
-                    maintain(b, d, n_buckets=n_buckets)
+                sink = partial(maintain, clean, state_dir, n_buckets=state_buckets)
             else:
-                _sink = merge_batch_into_state
+                sink = partial(commit_state, delta, state_dir)
             merge = with_retries(
-                _sink,
-                max_retries=max_retries,
-                backoff_ms=backoff_ms,
+                sink, max_retries=max_retries, backoff_ms=backoff_ms
             )
             try:
-                merge(clean, state_dir, n_buckets=state_buckets)
+                with _job(spark, epoch_id, "state commit"):
+                    merge()
             except Exception as e:  # noqa: BLE001 — retries exhausted
-                clean.withColumn(
-                    "error_context", F.lit(f"merge failed: {e}")
-                ).withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-                    "append"
-                ).parquet(dlq_dir)
-                # compensate: the state never received this batch,
-                # so fold the inverse delta (swap removed/added) —
-                # but ONLY into folds whose committed marker proves
-                # the forward fold of THIS epoch actually landed
-                # (a fold that threw before its atomic rename never
-                # happened; inverse-folding it would corrupt state
-                # it never touched, and a fold committed by a
-                # PREVIOUS attempt of this epoch must be
-                # compensated even though need_* was False — in that
-                # replay case delta was never computed, so compute it
-                # now: the merge failed, so the state is still the
-                # pre-merge image the delta is defined against)
-                if delta is None and (
-                    (mv_spec is not None and _mv_marker() == marker)
-                    or (
-                        digest_buckets is not None
-                        and _digest_marker() == marker
-                    )
-                ):
-                    delta = compute_mv_delta(clean)
-                if delta is not None:
-                    if mv_spec is not None and _mv_marker() == marker:
-                        _fold_mv(
-                            delta[1], delta[0], marker + "-compensated"
+                with _job(spark, epoch_id, "dlq"):
+                    clean.withColumn(
+                        "error_context", F.lit(f"merge failed: {e}")
+                    ).withColumn("epoch_id", F.lit(epoch_id)).write.mode(
+                        "append"
+                    ).parquet(dlq_dir)
+                # compensate: the state never received this batch, so
+                # fold the inverse delta (swap removed/added) into the
+                # stores whose committed marker proves the forward fold
+                # of THIS epoch landed — including one committed by a
+                # PREVIOUS attempt of this epoch (a fold that threw
+                # before its atomic rename never happened). LSM mode may
+                # have no delta yet: the merge failed, so the state is
+                # still the pre-merge image the delta is defined against.
+                landed = [f for f in folds if _marker(f[1]) == marker]
+                if landed and delta is None:
+                    with _job(spark, epoch_id, "delta"):
+                        delta = epoch_delta(
+                            clean, state_dir, n_buckets=state_buckets
                         )
-                    if (
-                        digest_buckets is not None
-                        and _digest_marker() == marker
-                    ):
-                        fold_digests(
-                            digest_dir, delta[1], delta[0],
-                            marker + "-compensated", digest_buckets,
-                        )
-            finally:
-                if delta is not None:
-                    delta[0].unpersist()
-                    delta[1].unpersist()
+                for step, _, fold in landed:
+                    with _job(spark, epoch_id, step):
+                        fold(delta.added, delta.removed, marker + "-compensated")
         finally:
+            if delta is not None:
+                delta.release()
             batch.unpersist()
 
     q = (

@@ -4,6 +4,7 @@ reference's O(table) REFRESH MATERIALIZED VIEW)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from scylla_pg_cdc_spark.streaming.mv import (
@@ -161,6 +162,55 @@ def test_stale_upsert_after_delete_stays_deleted(spark):
     removed, added = state_transition(state, stale, "key")
     mv = apply_delta(None, removed, added, ["grp"], ["v"])
     assert mv.count() == 0  # tombstone outranks the stale upsert
+
+
+# (prev_state rows, batch rows) per epoch of the three ordering cases
+# above, run through the pipeline's single keyed delta as well
+DELTA_CASES = {
+    "out_of_order": [
+        ([], [(1, "UPSERT", "a", 10, 100)]),
+        ([(1, "UPSERT", "a", 10, 100)], [(1, "UPSERT", "b", 99, 50)]),
+    ],
+    "delete_then_reinsert": [
+        ([], [(1, "UPSERT", "g", 10, 10)]),
+        ([(1, "UPSERT", "g", 10, 10)], [(1, "DELETE", "g", 0, 20)]),
+        ([(1, "DELETE", "g", 0, 20)], [(1, "UPSERT", "g", 5, 30)]),
+    ],
+    "stale_upsert_after_delete": [
+        ([(1, "DELETE", "g", 0, 20)], [(1, "UPSERT", "g", 10, 10)]),
+    ],
+}
+
+
+@pytest.mark.parametrize("case", sorted(DELTA_CASES))
+def test_keyed_delta_matches_state_transition(spark, case):
+    """The streaming epoch's keyed delta (``keyed_delta`` +
+    ``delta_images``) yields exactly ``state_transition``'s
+    (removed, added) — the reference stays the spec."""
+    from scylla_pg_cdc_spark.streaming.pipeline import (
+        delta_images,
+        keyed_delta,
+    )
+
+    def bucketed(df):
+        return df.withColumn("__bucket", F.lit(0))
+
+    def rows(df, cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    for prev_rows, batch_rows in DELTA_CASES[case]:
+        batch = spark.createDataFrame(batch_rows, SCHEMA)
+        prev = spark.createDataFrame(prev_rows, SCHEMA) if prev_rows else None
+        want = state_transition(prev, batch, "key")
+        delta = keyed_delta(
+            bucketed(batch), None if prev is None else bucketed(prev), "key", 1
+        )
+        got = delta_images(delta, batch.columns, "key")
+        for w, g in zip(want, got):
+            assert g.columns == batch.columns
+            assert rows(g, batch.columns) == rows(w, batch.columns), (
+                f"{case}: prev={prev_rows} batch={batch_rows}"
+            )
 
 
 def test_join_view_incremental_equals_recompute(spark):
